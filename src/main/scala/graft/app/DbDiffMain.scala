@@ -10,7 +10,7 @@ import java.time.LocalDateTime
   *
   * {{{
   * spark-submit --class graft.app.DbDiffMain ... [-conf configuration.yaml]
-  *   [-o out.html] [-merkle 4096] [--demo]
+  *   [-o out.html|out.xlsx] [-merkle 4096] [-open] [--demo]
   * }}}
   *
   * Flow, matching `main.go:23-98`: load config (S1) → catalog the tables →
@@ -25,22 +25,44 @@ import java.time.LocalDateTime
   * terminal. This is also what [[DbDiffAppSpec]] pins.
   */
 object DbDiffMain {
-  def main(args: Array[String]): Unit = {
-    var conf = DbDiffConfig.DefaultConfigPath
-    var outName = ReportSink.DefaultOutputName
-    var demo = false
-    var merkle = 0
-    args.sliding(2, 1).toList.foreach {
-      case Array("-conf", v)   => conf = v
-      case Array("-o", v)      => outName = v
-      case Array("-merkle", v) => merkle = v.toInt
-      case _                   =>
+  /** The parsed command line. `open` is S10 behind a flag: the reference
+    * always spawns the OS viewer on macOS/Windows (main.go:261-269); a
+    * Spark deployment is usually headless, so spawning is opt-in. */
+  final case class Args(conf: String = DbDiffConfig.DefaultConfigPath,
+      outName: String = ReportSink.DefaultOutputName, merkle: Int = 0,
+      demo: Boolean = false, open: Boolean = false)
+
+  val Usage: String = "usage: DbDiffMain [-conf configuration.yaml] " +
+    "[-o out.html|out.xlsx] [-merkle N] [-open] [--demo]"
+
+  private val ValueFlags = Set("-conf", "-o", "-merkle")
+
+  /** Parses the command line. An unknown argument, a flag without its
+    * value or a non-positive-integer `-merkle` yields `Left` with a
+    * one-line message that ends in [[Usage]]. */
+  def parseArgs(args: Seq[String]): Either[String, Args] = {
+    @annotation.tailrec
+    def go(rest: List[String], acc: Args): Either[String, Args] = rest match {
+      case Nil => Right(acc)
+      case "--demo" :: tail => go(tail, acc.copy(demo = true))
+      case "-open" :: tail => go(tail, acc.copy(open = true))
+      case "-conf" :: v :: tail if !v.startsWith("-") => go(tail, acc.copy(conf = v))
+      case "-o" :: v :: tail if !v.startsWith("-") => go(tail, acc.copy(outName = v))
+      case "-merkle" :: v :: tail if !v.startsWith("-") => v.toIntOption.filter(_ > 0) match {
+        case Some(n) => go(tail, acc.copy(merkle = n))
+        case None => Left(s"-merkle needs a positive integer, got '$v'")
+      }
+      case flag :: _ if ValueFlags(flag) => Left(s"$flag needs a value")
+      case other :: _ => Left(s"unknown argument '$other'")
     }
-    if (args.contains("--demo")) demo = true
-    // S10 behind a flag: the reference always spawns the OS viewer on
-    // macOS/Windows (main.go:261-269); a Spark deployment is usually
-    // headless, so spawning is opt-in
-    val open = args.contains("-open")
+    go(args.toList, Args()).left.map(e => s"$e; $Usage")
+  }
+
+  def main(args: Array[String]): Unit = {
+    val Args(conf, outName, merkle, demo, open) = parseArgs(args.toIndexedSeq) match {
+      case Right(a) => a
+      case Left(msg) => System.err.println(msg); sys.exit(2)
+    }
 
     val config =
       if (demo && !java.nio.file.Files.exists(java.nio.file.Paths.get(conf)))

@@ -21,8 +21,7 @@ import org.apache.spark.sql.functions._
   * with both sides shuffled by key; broadcast-hash when one snapshot is
   * small) and nothing ever materializes on the driver. At 100 TB: both
   * snapshots shuffle-partition by `__key` hash — one shuffle each, no
-  * driver state, and if the lake bucket-stores snapshots by the same key the
-  * shuffle disappears entirely. Classification compares each side's packed
+  * driver state. Classification compares each side's packed
   * normalized row as ONE codegen'd string equality (r13 — see
   * [[classifyNormalized]] for the byte accounting); the positional
   * per-column compare runs only on UPDATED rows.
@@ -54,9 +53,7 @@ object SnapshotDiff {
     classifyNormalized(Normalize.withKey(before, pk), Normalize.withKey(after, pk))
 
   /** Same classification over already-normalized inputs (each: data columns
-    * stringified + `__key`). This is the entry point for pre-materialized
-    * snapshot stores — e.g. [[BucketedSnapshots]], where both sides are
-    * bucketed by `__key` and the join plans with ZERO shuffle. */
+    * stringified + `__key`). */
   private[operators] def classifyNormalized(bn: DataFrame, an: DataFrame): DataFrame = {
     val cols = bn.columns.filterNot(_ == Normalize.KeyCol).toIndexedSeq
     // r13 (guide §2.3, shuffle fewer bytes): each side packs its normalized
@@ -112,8 +109,9 @@ object SnapshotDiff {
     diffNormalized(Normalize.withKey(before, pk), Normalize.withKey(after, pk))
 
   /** Full diff over already-normalized snapshots (data columns stringified +
-    * `__key`) — used directly by pre-materialized stores. */
-  def diffNormalized(bn: DataFrame, an: DataFrame): DataFrame = {
+    * `__key`) — the body of [[diff]], [[diffOneWinner]] and the
+    * Merkle-pruned variants. */
+  private[operators] def diffNormalized(bn: DataFrame, an: DataFrame): DataFrame = {
     val cols = bn.columns.filterNot(_ == Normalize.KeyCol).toIndexedSeq
     val j = classifyNormalized(bn, an)
     val status = col("diff_status")
@@ -180,15 +178,9 @@ object SnapshotDiff {
     * full-outer join as the diff (the classify branches explode in place
     * — no re-join per branch), so the scale budget is identical:
     * one shuffle per side. */
-  def scd2(before: DataFrame, after: DataFrame, pk: Seq[String]): DataFrame =
-    scd2Normalized(
-      oneRowPerKey(Normalize.withKey(before, pk)),
-      oneRowPerKey(Normalize.withKey(after, pk)))
-
-  /** [[scd2]] over already one-winner'd normalized snapshots — used by the
-    * bucketed store, where both inputs arrive hash-distributed on `__key`
-    * and the whole history build plans with zero Exchange. */
-  def scd2Normalized(bn: DataFrame, an: DataFrame): DataFrame = {
+  def scd2(before: DataFrame, after: DataFrame, pk: Seq[String]): DataFrame = {
+    val bn = oneRowPerKey(Normalize.withKey(before, pk))
+    val an = oneRowPerKey(Normalize.withKey(after, pk))
     val cols = bn.columns.filterNot(_ == Normalize.KeyCol).toIndexedSeq
     val j = classifyNormalized(bn, an)
     val status = col("diff_status")
@@ -260,14 +252,8 @@ object SnapshotDiff {
     * normalize(B))` exactly, which the roundtrip oracle and property spec
     * pin. Scale shape: one key-hashed anti-join plus a union — the same
     * single-shuffle-per-side budget as the diff itself. */
-  def applyDiff(before: DataFrame, diffed: DataFrame, pk: Seq[String]): DataFrame =
-    applyDiffNormalized(oneRowPerKey(Normalize.withKey(before, pk)), diffed)
-
-  /** [[applyDiff]] over an already-normalized, already-deduplicated before
-    * snapshot — the entry point for pre-materialized stores
-    * ([[BucketedSnapshots.advance]]), where `bn`'s bucketed distribution
-    * makes the anti-join Exchange-free. */
-  def applyDiffNormalized(bn: DataFrame, diffed: DataFrame): DataFrame = {
+  def applyDiff(before: DataFrame, diffed: DataFrame, pk: Seq[String]): DataFrame = {
+    val bn = oneRowPerKey(Normalize.withKey(before, pk))
     val cols = bn.columns.filterNot(_ == Normalize.KeyCol).toIndexedSeq
     val gone = diffed.filter(col("diff_status").isin(Deleted, Updated))
       .select(col(Normalize.KeyCol)).distinct()
@@ -306,18 +292,6 @@ object SnapshotDiff {
     * BEFORE-then-AFTER emission — `diff_changefeed`'s oracle stays the
     * unchanged per-table wide-diff SQL. */
   def feedCompact(before: DataFrame, after: DataFrame, pk: Seq[String],
-      tableName: String, cols: Seq[String]): DataFrame =
-    feedCompactNormalized(Normalize.withKey(before, pk),
-      Normalize.withKey(after, pk), tableName, cols)
-
-  /** [[feedCompact]] over already-normalized snapshots (data columns
-    * stringified + `__key`) — the entry point for pre-materialized stores:
-    * with both sides bucketed by `__key` ([[BucketedSnapshots]]) the pack
-    * projection preserves the buckets' hash distribution, the full-outer
-    * join sort-merges bucket-to-bucket, and the feed projection adds no
-    * shuffle — the WHOLE multi-table changefeed export plans with zero
-    * Exchange (gated by `BucketedDiffSpec`). */
-  def feedCompactNormalized(bn: DataFrame, an: DataFrame,
       tableName: String, cols: Seq[String]): DataFrame = {
     // r13: delegates to [[classifyNormalized]]'s packed narrow-shuffle form
     // (one U+0001-joined string per side through the exchange — see its
@@ -325,7 +299,7 @@ object SnapshotDiff {
     // argument). The packed string is exactly the bytes the feed's md5
     // row_fp hashes, so emission applies md5 directly after the explode —
     // no per-row re-concatenation anywhere in the feed.
-    val j = classifyNormalized(bn, an)
+    val j = classified(before, after, pk)
     val status = col("diff_status")
     def sideRow(side: String, packed: Column): Column =
       struct(lit(side).as("side"), packed.as("packed"))
@@ -385,8 +359,7 @@ object SnapshotDiff {
     *
     * Untouched keys are dropped (the merge IS the change set). At 100 TB:
     * three shuffles of 32-byte fingerprints (one per snapshot), no row
-    * data in the joins, no driver state; the bucketed layout that makes
-    * two-way diffs Exchange-free applies unchanged. Keys must be unique
+    * data in the joins, no driver state. Keys must be unique
     * per snapshot (run the app loop's one-winner dedup first for
     * duplicate-key tables). */
   def threeWayMerge(base: DataFrame, left: DataFrame, right: DataFrame,
@@ -586,19 +559,14 @@ object SnapshotDiff {
     * the bucket's full row multiset (and hence EVERY key's sub-multiset)
     * is unchanged — those keys cannot produce one-winner diff rows. The
     * dedup runs after the prune, so clean buckets skip the per-key
-    * aggregation too, not just the join. */
-  def diffOneWinnerPruned(before: DataFrame, after: DataFrame, pk: Seq[String],
-      nBuckets: Int): DataFrame = {
-    val (bp, ap) = merklePruned(before, after, pk, nBuckets)
-    diffNormalized(oneRowPerKey(bp), oneRowPerKey(ap))
-  }
-
-  /** [[diffOneWinnerPruned]] for STANDING loops: the dirty-bucket list is
-    * materialized to the driver eagerly (≤ nBuckets longs — the same size
-    * class as a broadcast-join build side) and pruned with a codegen'd
-    * `InSet` filter, so nothing is ever persisted — a loop that never
-    * clears caches cannot leak them. Eagerness is deliberate here: the
-    * caller is an application ITERATION (already full of actions), not a
+    * aggregation too, not just the join.
+    *
+    * Built for STANDING loops: the dirty-bucket list is materialized to
+    * the driver eagerly (≤ nBuckets longs — the same size class as a
+    * broadcast-join build side) and pruned with a codegen'd `InSet`
+    * filter, so nothing is ever persisted — a loop that never clears
+    * caches cannot leak them. Eagerness is deliberate here: the caller is
+    * an application ITERATION (already full of actions), not a
     * lazily-registered query. */
   def diffOneWinnerPrunedEager(before: DataFrame, after: DataFrame, pk: Seq[String],
       nBuckets: Int): DataFrame = {

@@ -1,8 +1,7 @@
 package graft
 
-import graft.app.{DbDiffApp, DbDiffConfig, ReportSink}
+import graft.app.{DbDiffApp, DbDiffConfig, DbDiffMain, ReportSink}
 import graft.operators.Mutations
-import org.apache.spark.sql.DataFrame
 
 import java.nio.file.{Files, Paths}
 import java.time.LocalDateTime
@@ -50,6 +49,26 @@ class DbDiffAppSpec extends SparkTestBase {
     assert(c.db.password == "p#ss")   // '#' inside quotes kept
     assert(c.db.user == "dont'tell")  // apostrophe is plain text, comment gone
     assert(c.db.name == "o#brien")    // single-quoted '#' kept
+  }
+
+  test("command line: flags parse, bad input fails with one usage line") {
+    import DbDiffMain.Args
+    val good = Seq(
+      Seq() -> Args(),
+      Seq("--demo") -> Args(demo = true),
+      Seq("-conf", "c.yaml", "-o", "x.xlsx", "-merkle", "4096", "-open") ->
+        Args(conf = "c.yaml", outName = "x.xlsx", merkle = 4096, open = true))
+    good.foreach { case (args, want) => assert(DbDiffMain.parseArgs(args) == Right(want)) }
+    val bad = Seq(
+      Seq("-x") -> "unknown argument '-x'",
+      Seq("-o", "r.html", "extra") -> "unknown argument 'extra'",
+      Seq("-o") -> "-o needs a value",
+      Seq("-conf", "-o", "r.html") -> "-conf needs a value",
+      Seq("-merkle", "abc") -> "-merkle needs a positive integer, got 'abc'",
+      Seq("-merkle", "0") -> "-merkle needs a positive integer, got '0'")
+    bad.foreach { case (args, problem) =>
+      assert(DbDiffMain.parseArgs(args) == Left(s"$problem; ${DbDiffMain.Usage}"))
+    }
   }
 
   test("S9: timestamped default filename; explicit name passes through") {
@@ -105,44 +124,6 @@ class DbDiffAppSpec extends SparkTestBase {
     assert(console.isEmpty)
     val html2 = Files.readString(Paths.get(out2))
     assert(!html2.contains("<table>"))
-  }
-
-  test("bucketed store mode: loop equals the plain loop and diffs Exchange-free") {
-    val tables = Seq(Tables.region, Tables.customer)
-    def mkSource(flag: () => Boolean): TableDef => DataFrame = t => {
-      val base = Tables.load(spark, Sf, t.name)
-      if (flag()) {
-        base.createOrReplaceTempView(t.name)
-        spark.sql(Mutations.afterSql(t.name))
-      } else base
-    }
-
-    var mutP = false
-    val consoleP = scala.collection.mutable.ArrayBuffer.empty[String]
-    val plainApp = new DbDiffApp(spark, tables, mkSource(() => mutP),
-      consoleP.append(_), maxConsoleRows = 10000)
-    var mutS = false
-    val consoleS = scala.collection.mutable.ArrayBuffer.empty[String]
-    val storeApp = new DbDiffApp(spark, tables, mkSource(() => mutS),
-      consoleS.append(_), maxConsoleRows = 10000, storeBuckets = 4)
-
-    mutP = true; mutS = true
-    val rP = plainApp.iterate()
-    val rS = storeApp.iterate()
-    // identical change sets AND identical console rendering, table by table
-    assert(rS.changedKeys == rP.changedKeys && rS.totalChanged > 0)
-    assert(consoleS.sorted == consoleP.sorted)
-    // the store-mode diff (one-winner dedups + full-outer join) consumed
-    // the bucketed layout: zero Exchange in every table's physical plan
-    assert(storeApp.lastDiffPlans.keySet == Set("region", "customer"))
-    storeApp.lastDiffPlans.foreach { case (t, plan) =>
-      assert(!plan.contains("Exchange"), s"$t store-mode diff shuffles:\n$plan")
-    }
-    // iteration 2: nothing changed since the swap → empty diff in store
-    // mode too (generation g diffs against generation g+1, both bucketed)
-    consoleS.clear()
-    val rS2 = storeApp.iterate()
-    assert(rS2.totalChanged == 0 && consoleS.isEmpty)
   }
 
   test("S8: -o out.xlsx writes the reference's styled workbook (modified-cell runs)") {
@@ -322,17 +303,19 @@ class DbDiffAppSpec extends SparkTestBase {
       } else base
     }
     val plain = new DbDiffApp(spark, tables, source, _ => (), maxConsoleRows = 0)
-    val pruned = new DbDiffApp(spark, tables, source, _ => (), maxConsoleRows = 0,
-      merkleBuckets = 512)
+    // lazy and pinned snapshots: a JDBC config with -merkle runs the prune
+    // over pinned snapshots
+    val pruned = Seq(false, true).map(pin => new DbDiffApp(spark, tables, source,
+      _ => (), maxConsoleRows = 0, pinSnapshots = pin, merkleBuckets = 512))
     mutated = true
     val rPlain = plain.iterate()
-    // reset both apps' before to the unmutated fixture for a fair comparison:
-    // fresh pruned app sees the same before (sources are deterministic)
+    // every app took its before from the unmutated fixture at construction
+    // (sources are deterministic), so all see the same change set
     assert(rPlain.totalChanged > 0)
-    val rPruned = pruned.iterate()
-    assert(rPruned.changedKeys == rPlain.changedKeys)
-    // second iteration: no further mutation -> prune kills everything
-    val r2 = pruned.iterate()
-    assert(r2.totalChanged == 0)
+    pruned.foreach { app =>
+      assert(app.iterate().changedKeys == rPlain.changedKeys)
+      // second iteration: no further mutation -> prune kills everything
+      assert(app.iterate().totalChanged == 0)
+    }
   }
 }

@@ -57,7 +57,7 @@ class MerkleDiffSpec extends SparkTestBase {
     val a = DiffQueries.after(spark, Sf, li)
     val full = SnapshotDiff.diffOneWinner(b, a, li.pk)
       .collect().map(_.toSeq).toSet
-    val pruned = SnapshotDiff.diffOneWinnerPruned(b, a, li.pk, 512)
+    val pruned = SnapshotDiff.diffOneWinnerPrunedEager(b, a, li.pk, 512)
       .collect().map(_.toSeq).toSet
     assert(full.nonEmpty)
     assert(pruned == full)
